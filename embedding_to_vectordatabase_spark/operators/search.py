@@ -172,6 +172,58 @@ def _query_matrix(
     return qids, qmat
 
 
+# DDL of the tiny store relations, shared by their writers and
+# ``_load_small`` (a load reads with it instead of inferring it)
+_CENTROIDS_DDL = "list_id int, centroid array<double>"
+_PQ_BOOKS_DDL = "sub int, code int, centroid array<double>"
+_IVF_META_DDL = "metric string"
+_OPQ_ROTATION_DDL = "row_idx int, row array<double>"
+_SQ8_PARAMS_DDL = "dim_idx int, vmin double, vdiff double"
+
+
+def _load_small(
+    spark, index_path: str, rel: str, schema: str, key: str | None = None
+) -> pa.Table:
+    """A tiny store relation (quantizer, params, meta) as an Arrow
+    table in ``key`` order, for ONE Spark job: the relation's known
+    DDL schema skips the schema-inference job, and the sort runs in
+    numpy on the driver instead of a range-partitioned ``orderBy``
+    (sample + sort jobs). Every persisted-index search and upsert
+    loads 2–3 of these, so their job count is the per-call floor.
+    An existing but empty relation raises: an empty quantizer would
+    otherwise surface as a shape error deep in the scoring path."""
+    tbl = spark.read.schema(schema).parquet(_crel(index_path, rel)).toArrow()
+    if tbl.num_rows == 0:
+        raise ValueError(f"empty {rel} relation under {index_path}")
+    if key is not None:
+        tbl = tbl.take(np.argsort(tbl.column(key).to_numpy(), kind="stable"))
+    return tbl
+
+
+def _append_codes(
+    df: DataFrame, index_path: str, nlist: int | None = None,
+    rel: str = "codes",
+) -> int:
+    """Append encoded rows to a store relation and return how many
+    were written. The count is a ``DataFrame.observe`` metric of the
+    write itself: the batch lineage runs once (the documented ingest
+    shape derives batches from expensive pipelines), and the store is
+    neither re-read nor re-listed to diff row counts. ``nlist`` marks
+    an IVF store partitioned by ``list_id``: rows repartition on the
+    key first — the build path's small-files fix — so an append adds
+    at most ``nlist`` files instead of tasks × touched lists."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    if nlist is not None:
+        df = df.repartition(nlist, "list_id")
+    w = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("append")
+    if nlist is not None:
+        w = w.partitionBy("list_id")
+    w.parquet(_crel(index_path, rel))
+    return int(obs.get["n"])
+
+
 def dense_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1170,7 +1222,7 @@ def build_ivf_index(
     spark = corpus.sparkSession
     spark.createDataFrame(
         [(i, [float(x) for x in cent[i]]) for i in range(nlist_eff)],
-        "list_id int, centroid array<double>",
+        _CENTROIDS_DDL,
     ).coalesce(1).write.mode("overwrite").parquet(
         _crel(index_path, "centroids")
     )
@@ -1185,6 +1237,7 @@ def build_ivf_index(
     return nlist_eff
 
 
+@_pin
 def upsert_ivf_index(
     index_path: str,
     new_vectors: DataFrame,
@@ -1205,27 +1258,16 @@ def upsert_ivf_index(
     next ``build_ivf_index``; a production store tracks the
     append-to-rebuild ratio. Returns the number of rows appended.
     """
-    import numpy as np
-
-    spark = new_vectors.sparkSession
-    cent_rows = (
-        spark.read.parquet(_crel(index_path, "centroids"))
-        .orderBy("list_id")
-        .collect()
+    cent = _load_ivf_centroids(new_vectors.sparkSession, index_path)
+    nearest_list = _nearest_list_udf(cent.T, (cent**2).sum(axis=1))
+    return _append_codes(
+        new_vectors.select(
+            F.col(corpus_id),
+            nearest_list(F.col(corpus_vec)).alias("list_id"),
+        ),
+        index_path,
+        rel="assignments",
     )
-    cent = np.array(
-        [list(r["centroid"]) for r in cent_rows], dtype=np.float64
-    )
-    cm = cent.T
-    c2 = (cent**2).sum(axis=1)
-    nearest_list = _nearest_list_udf(cm, c2)
-
-    n = new_vectors.count()
-    new_vectors.select(
-        F.col(corpus_id),
-        nearest_list(F.col(corpus_vec)).alias("list_id"),
-    ).write.mode("append").parquet(_crel(index_path, "assignments"))
-    return n
 
 
 @_pin
@@ -1249,17 +1291,10 @@ def ann_topk_ivf_index(
     set is corpus ⋈ assignments ⋈ probed-lists (the assignments join
     is on the corpus id — bucket/co-partition both by id at scale for
     a shuffle-free join)."""
-    import numpy as np
-
     metric = metric.upper()
     if metric not in _METRICS:
         raise ValueError(f"unknown metric {metric!r}; use IP|COSINE|L2")
-    cent_rows = (
-        spark.read.parquet(_crel(index_path, "centroids"))
-        .orderBy("list_id")
-        .collect()
-    )
-    cent = np.array([list(r["centroid"]) for r in cent_rows], dtype=np.float64)
+    cent = _load_ivf_centroids(spark, index_path)
     cm = cent.T
     c2 = (cent**2).sum(axis=1)
     npb = min(nprobe, len(cent))
@@ -2825,16 +2860,8 @@ def _write_pq_codebooks(
 def load_pq_codebooks(spark, index_path: str) -> "np.ndarray":
     """Load persisted PQ codebooks back to the (m, ksub, dsub) float64
     array (m×ksub rows — driver-side by size, like IVF centroids)."""
-    import numpy as np
-
-    # r18: Arrow transfer (same deterministic orderBy) instead of
-    # collect + per-row list() — this load runs at EVERY index search
-    # call, not just at build
-    tbl = (
-        spark.read.parquet(_crel(index_path, "pq_codebooks"))
-        .orderBy("sub", "code")
-        .toArrow()
-    )
+    # rows scatter to [sub, code] below, so no sort is needed
+    tbl = _load_small(spark, index_path, "pq_codebooks", _PQ_BOOKS_DDL)
     sub = tbl.column("sub").to_numpy()
     code = tbl.column("code").to_numpy()
     mm = 1 + int(sub.max())
@@ -2880,6 +2907,7 @@ def build_pq_index(
     return books.shape[0], books.shape[1]
 
 
+@_pin
 def upsert_pq_index(
     index_path: str,
     new_vectors: DataFrame,
@@ -2893,17 +2921,8 @@ def upsert_pq_index(
     until the next build). Returns the number of rows appended."""
     spark = new_vectors.sparkSession
     books = load_pq_codebooks(spark, index_path)
-    # appended-row count from the code store's parquet FOOTERS
-    # (metadata-only) instead of a .count() that re-executes the
-    # batch lineage — the documented ingest shape derives batches
-    # from expensive pipelines (review finding r14, matching the
-    # sparse/minhash upserts)
-    n0 = spark.read.parquet(_crel(index_path, "codes")).count()
-    pq_encode(new_vectors, books, vec_col, corpus_id).write.mode(
-        "append"
-    ).parquet(_crel(index_path, "codes"))
-    return (
-        spark.read.parquet(_crel(index_path, "codes")).count() - n0
+    return _append_codes(
+        pq_encode(new_vectors, books, vec_col, corpus_id), index_path
     )
 
 
@@ -3001,7 +3020,7 @@ def _write_ivf_meta(spark, index_path: str, metric: str) -> None:
     high-IP vectors get L2-assigned to lists the IP probe ranks low
     (r14 ADVICE). One tiny single-row parquet."""
     spark.createDataFrame(
-        [(metric,)], "metric string"
+        [(metric,)], _IVF_META_DDL
     ).coalesce(1).write.mode("overwrite").parquet(
         _crel(index_path, "ivf_meta")
     )
@@ -3019,11 +3038,8 @@ def _load_ivf_meta(spark, index_path: str) -> str:
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(p):
         return "L2"
-    return str(
-        spark.read.parquet(_crel(index_path, "ivf_meta")).first()[
-            "metric"
-        ]
-    )
+    tbl = _load_small(spark, index_path, "ivf_meta", _IVF_META_DDL)
+    return str(tbl.column("metric")[0].as_py())
 
 
 def _ivfadc_encode(
@@ -3152,7 +3168,7 @@ def build_ivfadc_index(
     spark = corpus.sparkSession
     spark.createDataFrame(
         [(i, [float(x) for x in cent[i]]) for i in range(len(cent))],
-        "list_id int, centroid array<double>",
+        _CENTROIDS_DDL,
     ).coalesce(1).write.mode("overwrite").parquet(
         _crel(index_path, "centroids")
     )
@@ -3174,16 +3190,13 @@ def build_ivfadc_index(
 
 def _load_ivf_centroids(spark, index_path: str) -> "np.ndarray":
     """(nlist, dim) float64 centroid matrix off the tiny store."""
-    import numpy as np
-
-    rows = (
-        spark.read.parquet(_crel(index_path, "centroids"))
-        .orderBy("list_id")
-        .collect()
+    tbl = _load_small(
+        spark, index_path, "centroids", _CENTROIDS_DDL, "list_id"
     )
-    return np.array([list(r["centroid"]) for r in rows], dtype=np.float64)
+    return _pa_matrix(tbl.column("centroid"))
 
 
+@_pin
 def upsert_ivfadc_index(
     index_path: str,
     new_vectors: DataFrame,
@@ -3201,19 +3214,10 @@ def upsert_ivfadc_index(
     cent = _load_ivf_centroids(spark, index_path)
     books = load_pq_codebooks(spark, index_path)
     metric = _load_ivf_meta(spark, index_path)
-    # appended-row count from the code store's parquet FOOTERS
-    # (metadata-only) instead of a .count() that re-executes the
-    # batch lineage — the documented ingest shape derives batches
-    # from expensive pipelines (review finding r14, matching the
-    # sparse/minhash upserts)
-    n0 = spark.read.parquet(_crel(index_path, "codes")).count()
-    _ivfadc_encode(
-        new_vectors, cent, books, vec_col, corpus_id, metric
-    ).write.mode("append").partitionBy("list_id").parquet(
-        _crel(index_path, "codes")
-    )
-    return (
-        spark.read.parquet(_crel(index_path, "codes")).count() - n0
+    return _append_codes(
+        _ivfadc_encode(new_vectors, cent, books, vec_col, corpus_id, metric),
+        index_path,
+        nlist=len(cent),
     )
 
 
@@ -3639,7 +3643,7 @@ def build_opq_index(
     spark = corpus.sparkSession
     spark.createDataFrame(
         [(i, [float(x) for x in R[i]]) for i in range(len(R))],
-        "row_idx int, row array<double>",
+        _OPQ_ROTATION_DDL,
     ).coalesce(1).write.mode("overwrite").parquet(
         _crel(index_path, "opq_rotation")
     )
@@ -3652,16 +3656,13 @@ def build_opq_index(
 
 def load_opq_rotation(spark, index_path: str) -> "np.ndarray":
     """(dim, dim) float64 rotation off the tiny store."""
-    import numpy as np
-
-    rows = (
-        spark.read.parquet(_crel(index_path, "opq_rotation"))
-        .orderBy("row_idx")
-        .collect()
+    tbl = _load_small(
+        spark, index_path, "opq_rotation", _OPQ_ROTATION_DDL, "row_idx"
     )
-    return np.array([list(r["row"]) for r in rows], dtype=np.float64)
+    return _pa_matrix(tbl.column("row"))
 
 
+@_pin
 def upsert_opq_index(
     index_path: str,
     new_vectors: DataFrame,
@@ -3675,17 +3676,8 @@ def upsert_opq_index(
     spark = new_vectors.sparkSession
     R = load_opq_rotation(spark, index_path)
     books = load_pq_codebooks(spark, index_path)
-    # appended-row count from the code store's parquet FOOTERS
-    # (metadata-only) instead of a .count() that re-executes the
-    # batch lineage — the documented ingest shape derives batches
-    # from expensive pipelines (review finding r14, matching the
-    # sparse/minhash upserts)
-    n0 = spark.read.parquet(_crel(index_path, "codes")).count()
-    opq_encode(new_vectors, R, books, vec_col, corpus_id).write.mode(
-        "append"
-    ).parquet(_crel(index_path, "codes"))
-    return (
-        spark.read.parquet(_crel(index_path, "codes")).count() - n0
+    return _append_codes(
+        opq_encode(new_vectors, R, books, vec_col, corpus_id), index_path
     )
 
 
@@ -4069,7 +4061,7 @@ def build_sq8_index(
             (i, float(vmin[i]), float(vdiff[i]))
             for i in range(len(vmin))
         ],
-        "dim_idx int, vmin double, vdiff double",
+        _SQ8_PARAMS_DDL,
     ).coalesce(1).write.mode("overwrite").parquet(
         _crel(index_path, "sq8_params")
     )
@@ -4081,18 +4073,16 @@ def build_sq8_index(
 
 def load_sq8_params(spark, index_path: str):
     """(vmin, vdiff) float64 arrays off the tiny params store."""
-    import numpy as np
-
-    rows = (
-        spark.read.parquet(_crel(index_path, "sq8_params"))
-        .orderBy("dim_idx")
-        .collect()
+    tbl = _load_small(
+        spark, index_path, "sq8_params", _SQ8_PARAMS_DDL, "dim_idx"
     )
-    vmin = np.array([r["vmin"] for r in rows], dtype=np.float64)
-    vdiff = np.array([r["vdiff"] for r in rows], dtype=np.float64)
-    return vmin, vdiff
+    return (
+        tbl.column("vmin").to_numpy().astype(np.float64),
+        tbl.column("vdiff").to_numpy().astype(np.float64),
+    )
 
 
+@_pin
 def upsert_sq8_index(
     index_path: str,
     new_vectors: DataFrame,
@@ -4105,17 +4095,8 @@ def upsert_sq8_index(
     tradeoff). Returns rows appended."""
     spark = new_vectors.sparkSession
     vmin, vdiff = load_sq8_params(spark, index_path)
-    # appended-row count from the code store's parquet FOOTERS
-    # (metadata-only) instead of a .count() that re-executes the
-    # batch lineage — the documented ingest shape derives batches
-    # from expensive pipelines (review finding r14, matching the
-    # sparse/minhash upserts)
-    n0 = spark.read.parquet(_crel(index_path, "codes")).count()
-    sq8_encode(new_vectors, vmin, vdiff, vec_col, corpus_id).write.mode(
-        "append"
-    ).parquet(_crel(index_path, "codes"))
-    return (
-        spark.read.parquet(_crel(index_path, "codes")).count() - n0
+    return _append_codes(
+        sq8_encode(new_vectors, vmin, vdiff, vec_col, corpus_id), index_path
     )
 
 
@@ -4211,13 +4192,13 @@ def build_ivfsq8_index(
     spark = corpus.sparkSession
     spark.createDataFrame(
         [(i, [float(x) for x in cent[i]]) for i in range(len(cent))],
-        "list_id int, centroid array<double>",
+        _CENTROIDS_DDL,
     ).coalesce(1).write.mode("overwrite").parquet(
         _crel(index_path, "centroids")
     )
     spark.createDataFrame(
         [(i, float(vmin[i]), float(vdiff[i])) for i in range(dim)],
-        "dim_idx int, vmin double, vdiff double",
+        _SQ8_PARAMS_DDL,
     ).coalesce(1).write.mode("overwrite").parquet(
         _crel(index_path, "sq8_params")
     )
@@ -4310,6 +4291,7 @@ def _ivfsq8_encode(
     )
 
 
+@_pin
 def upsert_ivfsq8_index(
     index_path: str,
     new_vectors: DataFrame,
@@ -4324,19 +4306,12 @@ def upsert_ivfsq8_index(
     cent = _load_ivf_centroids(spark, index_path)
     vmin, vdiff = load_sq8_params(spark, index_path)
     metric = _load_ivf_meta(spark, index_path)
-    # appended-row count from the code store's parquet FOOTERS
-    # (metadata-only) instead of a .count() that re-executes the
-    # batch lineage — the documented ingest shape derives batches
-    # from expensive pipelines (review finding r14, matching the
-    # sparse/minhash upserts)
-    n0 = spark.read.parquet(_crel(index_path, "codes")).count()
-    _ivfsq8_encode(
-        new_vectors, cent, vmin, vdiff, vec_col, corpus_id, metric
-    ).write.mode("append").partitionBy("list_id").parquet(
-        _crel(index_path, "codes")
-    )
-    return (
-        spark.read.parquet(_crel(index_path, "codes")).count() - n0
+    return _append_codes(
+        _ivfsq8_encode(
+            new_vectors, cent, vmin, vdiff, vec_col, corpus_id, metric
+        ),
+        index_path,
+        nlist=len(cent),
     )
 
 
@@ -4477,7 +4452,7 @@ def rebalance_ivfsq8_index(
     ).partitionBy("list_id").parquet(f"{index_path}/{codes_stage}")
     spark.createDataFrame(
         [(i, [float(x) for x in cent[i]]) for i in range(len(cent))],
-        "list_id int, centroid array<double>",
+        _CENTROIDS_DDL,
     ).coalesce(1).write.mode("overwrite").parquet(
         f"{index_path}/{cent_stage}"
     )
